@@ -1,53 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Verify.jsonString
 
 object Bench {
-  /** Escape a string for safe interpolation inside a JSON string literal.
-    * benchOut/sfDir are env-controlled paths: a quote or backslash in either
-    * would otherwise produce the exact `parsed: null` artifact failure this
-    * file exists to prevent.
-    */
-  private def jesc(s: String): String = s.flatMap {
-    case '"'           => "\\\""
-    case '\\'          => "\\\\"
-    case c if c < ' '  => "\\u%04x".format(c.toInt)
-    case c             => c.toString
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // custom SQL functions + the levenshtein band/threshold optimizer
-    // rule — the gate grades the REWRITTEN edit-distance plans
-    GraftExtensions.register(spark)
+    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // untimed warmup: JVM/codegen/scan setup shouldn't bill the first query
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
       SparkEntry.queries("text_token_count")(spark, sfDir).count()
     } catch { case _: Throwable => () }
-    // SPARK_GRAFT_ONLY=a,b,c: time a few queries during local iteration
-    // (the driver never sets it — its bench always covers everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // drop cross-query cached relations so each query pays its own cost
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try { GraftSession.forceAll(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-      val t = (System.nanoTime() - t0) / 1e9
-      SparkEntry.releaseCaches()
-      t
-    }
-
-    val battery = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val battery = GraftSession.onlySelected().getOrElse(SparkEntry.queries)
 
     // Timing protocol (r8): single-run numbers carried 20x ambient-load
     // spikes into the record artifact (r7: q_pivot_status 0.23 s quiet vs
@@ -60,14 +23,25 @@ object Bench {
     val fixedRepeat = sys.env.get("SPARK_GRAFT_REPEAT").map(n => math.max(1, n.toInt))
     val wallBudgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET").map(_.toDouble).getOrElse(420.0)
     val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // a query that throws on any run is failed: no time, no further runs
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    def timeOnce(name: String): Unit =
+      GraftSession.timedRun(spark)(battery(name)(spark, sfDir)) match {
+        case Right((t, _)) => best(name) = best.get(name).fold(t)(math.min(_, t))
+        case Left(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          best -= name
+          failed += name
+      }
+    val names = battery.keys.toSeq.sorted
     fixedRepeat match {
       case Some(n) =>
-        battery.foreach { case (name, fn) => best(name) = (1 to n).map(_ => timeOnce(fn)).min }
+        names.foreach(name => (1 to n).foreach(_ => if (!failed(name)) timeOnce(name)))
       case None =>
+        // wall clock for the budget only; query times come from timedRun
         val benchStart = System.nanoTime()
         def elapsed: Double = (System.nanoTime() - benchStart) / 1e9
-        battery.foreach { case (name, fn) => best(name) = timeOnce(fn) }
-        val fnOf = battery.toMap
+        names.foreach(timeOnce)
         // pass 2: everything; pass 3: rows still under a second after min-of-2
         for (pass <- 2 to 3) {
           val due = best.toSeq
@@ -76,63 +50,51 @@ object Bench {
           due.foreach { case (name, t) =>
             // guard: don't start a re-run the budget can't absorb even if
             // it repeats the observed time (plus scheduling headroom)
-            if (elapsed + math.max(t, 0.2) + 1.0 <= wallBudgetSec) {
-              val t2 = timeOnce(fnOf(name))
-              if (t2 >= 0 && t2 < best(name)) best(name) = t2
-            }
+            if (elapsed + math.max(t, 0.2) + 1.0 <= wallBudgetSec) timeOnce(name)
           }
         }
     }
     val results = best.toSeq.sortBy(_._1)
 
     def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val total = results.map(_._2).sum
+    def entry(kv: (String, Double)): String = jsonString(kv._1) + ":" + fmt(kv._2)
+    // `value` sums the timed queries only; n_queries counts them, and
+    // every query that threw is named in `failed` instead
+    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
+    val total = fmt(results.map(_._2).sum)
+    val failedList = failed.toSeq.map(jsonString).mkString("[", ",", "]")
+    def line(extra: String, queries: String): String =
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failedList,$extra"queries":$queries,"sf":${jsonString(sfDir)}}"""
     // Full artifact to disk — the driver's stdout capture is a 2000-byte
     // tail, which a 128-query map overflows (BENCH_r03..r06 all reached
     // the judge as `parsed: null` log fragments). The file is the record.
-    val fullQs = results.map { case (k, v) => "\"" + jesc(k) + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$fullQs,"sf":"${jesc(sfDir)}"}"""
-    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchOut), fullLine)
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchOut),
+      line("", results.map(entry).mkString("{", ",", "}")))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $benchOut: ${e.getMessage}")
     }
-    // Stdout line budgeted to fit the driver's tail window: slowest
-    // queries first (the ones perf grading needs), stop before 1600
-    // bytes so the line plus sbt's trailing "[success]" banner both
-    // survive the 2000-byte capture. Omitted entries are counted, and
-    // the full map is always in bench.json.
+    // Stdout line budgeted to fit the driver's 2000-byte tail window:
+    // slowest queries first (the ones perf grading needs), stop before
+    // 1600 bytes. Omitted entries are counted, and the full map is always
+    // in bench.json. The failed list is never trimmed.
     val budget = 1600
-    val slowFirst = results.sortBy(-_._2)
     val picked = scala.collection.mutable.ArrayBuffer.empty[String]
     // measure the real preamble/suffix — benchOut and sfDir are
     // env-controlled paths, so a fixed allowance could blow the budget
     // right back past the capture window
-    val skeleton =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"omitted":9999,"queries_full":"${jesc(benchOut)}","queries":{},"sf":"${jesc(sfDir)}"}"""
-    var used = skeleton.length
+    def head(omitted: Int) = s""""omitted":$omitted,"queries_full":${jsonString(benchOut)},"""
+    var used = line(head(9999), "{}").length
     var omitted = 0
-    slowFirst.foreach { case (k, v) =>
-      val entry = "\"" + jesc(k) + "\":" + fmt(v)
-      if (used + entry.length + 1 <= budget) { picked += entry; used += entry.length + 1 }
+    results.sortBy(-_._2).map(entry).foreach { e =>
+      if (used + e.length + 1 <= budget) { picked += e; used += e.length + 1 }
       else omitted += 1
     }
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"omitted":$omitted,"queries_full":"${jesc(benchOut)}","queries":${picked.mkString("{", ",", "}")},"sf":"${jesc(sfDir)}"}"""
-    println(line)
+    val stdoutLine = line(head(omitted), picked.mkString("{", ",", "}"))
     spark.stop()
-    // Driver-parseability (r17 VERDICT item 1: every BENCH_r01..r17
-    // artifact arrived with `parsed: null` although the line above is
-    // valid JSON inside the capture window). Defensively re-emit AFTER
-    // spark.stop() so no executor/shutdown logging can interleave: an
-    // ultra-short totals-only line first, then the same budgeted
-    // per-query line as the process's very last stdout. Timing,
-    // methodology and the JSON contract are unchanged — the same line
-    // is printed twice.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"${jesc(sfDir)}"}""")
-    println(line)
+    // the process's last stdout line, printed once after spark.stop() so
+    // no shutdown logging can follow it (the root build forks `run` with
+    // raw stdout, so sbt adds no `[info] ` prefix or `[success]` banner)
+    println(stdoutLine)
     System.out.flush()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Opinionated session factory: the conf we want on a real cluster,
   * scaled down for local[N].
@@ -27,8 +28,37 @@ object GraftSession {
     * what "run the query" costs the consumer who writes the result
     * (Verify, the correctness gate, has always paid it: it writes
     * parquet). */
-  def forceAll(df: org.apache.spark.sql.DataFrame): Long =
+  def forceAll(df: DataFrame): Long =
     df.queryExecution.toRdd.count()
+
+  /** One timed run of a query — the timing method Bench, Probe and Soak
+    * share. Cross-query cached relations are dropped BEFORE the clock so
+    * each query pays its own cost; the query is built and fully executed
+    * ([[forceAll]]) inside it; its tracked caches are released after it
+    * whether or not it threw. Returns (seconds, rows), or the failure:
+    * a query that throws is never recorded as a time. */
+  def timedRun(spark: SparkSession)(df: => DataFrame): Either[Throwable, (Double, Long)] = {
+    spark.catalog.clearCache()
+    val t0 = System.nanoTime()
+    try {
+      val rows = forceAll(df)
+      Right(((System.nanoTime() - t0) / 1e9, rows))
+    } catch { case NonFatal(e) => Left(e) }
+    finally SparkEntry.releaseCaches()
+  }
+
+  /** `SPARK_GRAFT_ONLY=a,b,c` restricts Verify and Bench to the named
+    * queries for fast local iteration; `None` when unset. The driver never
+    * sets it, so the real gate and bench always cover everything. A typo'd
+    * filter would otherwise run nothing and still gate green (every query
+    * labeled filtered_out), so one that matches no query fails loudly. */
+  def onlySelected(): Option[Map[String, (SparkSession, String) => DataFrame]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map { o =>
+      val names = o.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val selected = SparkEntry.queries.filter { case (name, _) => names(name) }
+      require(selected.nonEmpty, s"SPARK_GRAFT_ONLY matched no queries: ${names.mkString(",")}")
+      selected
+    }
 
   def builder(cores: Int = 4): SparkSession.Builder =
     SparkSession
@@ -45,22 +75,6 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"/tmp/graft-warehouse-${ProcessHandle.current().pid()}")
       .config("spark.ui.enabled", "false")
-
-  /** The conf profile for a real multi-executor deployment (not used by
-    * the local harness; documents how the same code ships at 100 TB).
-    * Shuffle partitions start high and AQE coalesces down; file split
-    * and broadcast sizes are tuned for object-store parquet. */
-  def clusterBuilder(): SparkSession.Builder =
-    SparkSession.builder()
-      .appName("graft")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.shuffle.partitions", "2000")
-      .config("spark.sql.files.maxPartitionBytes", "256m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.session.timeZone", "UTC")
 
   def get(cores: Int = 4): SparkSession = {
     val s = builder(cores).getOrCreate()

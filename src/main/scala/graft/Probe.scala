@@ -1,14 +1,14 @@
 import graft._
 
 /** Single-query timing probe for the interleaved A/B protocol
-  * (tools/ab_probe.sh). Mirrors Bench's per-query hygiene so probe
-  * rows are comparable to bench rows: cross-query caches cleared
-  * BEFORE the clock, per-query tracked caches released after. The
-  * first listed query still pays JVM/codegen/scan warmup (prepend a
-  * sacrificial query, the ab_probe round-2 protocol) — and
-  * `PROBE_REPEAT=n` re-times the whole list n times in one JVM, so
-  * later passes read deep-warm, the regime the bench's min-of-2
-  * reports; ab_probe's summary then aggregates all passes as samples.
+  * (tools/ab_probe.sh). Times through `GraftSession.timedRun`, as Bench
+  * does, so probe rows are comparable to bench rows; a query that throws
+  * prints FAILED, never seconds. The first listed query still pays
+  * JVM/codegen/scan warmup (prepend a sacrificial query, the ab_probe
+  * round-2 protocol) — and `PROBE_REPEAT=n` re-times the whole list n
+  * times in one JVM, so later passes read deep-warm, the regime the
+  * bench's min-of-2 reports; ab_probe's summary then aggregates all
+  * passes as samples.
   */
 object Probe {
   def main(a: Array[String]): Unit = {
@@ -17,12 +17,12 @@ object Probe {
     val names = if (a.nonEmpty) a.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = GraftSession.get(32)
     for (_ <- 1 to reps) names.foreach { n =>
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime
-      val c = GraftSession.forceAll(SparkEntry.queries(n)(spark, sf))
-      val dt = (System.nanoTime - t0) / 1e9
-      SparkEntry.releaseCaches()
-      println(f"PROBE $n%-28s $c%9d rows  $dt%8.2fs")
+      GraftSession.timedRun(spark)(SparkEntry.queries(n)(spark, sf)) match {
+        case Right((dt, c)) => println(f"PROBE $n%-28s $c%9d rows  $dt%8.2fs")
+        case Left(e) =>
+          println(f"PROBE $n%-28s FAILED")
+          System.err.println(s"[probe] $n failed: ${e.getMessage}")
+      }
     }
     spark.stop()
   }

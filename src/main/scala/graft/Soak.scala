@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Weak-scaling soak: replicate the driver testdata N× with DISJOINT
@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> SPARK_GRAFT_SOAK_FACTORS=1,2,5,10
   *        sbt "runMain graft.Soak"
-  * Emits one JSON line per factor: {"factor":k,"queries":{name:sec,…}}.
+  * Emits one JSON line per factor: {"factor":k,"queries":{name:sec,…}},
+  * a query that threw reading "FAILED" instead of seconds.
   */
 object Soak {
 
@@ -455,7 +456,7 @@ object Soak {
     val historyOnly = sys.env.getOrElse("SPARK_GRAFT_SOAK_HISTORY_ONLY", "0") == "1"
     val onlyQueries = sys.env.get("SPARK_GRAFT_SOAK_QUERIES")
       .map(_.split(",").map(_.trim).toSeq).getOrElse(SoakQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // 1 = scale spark.sql.shuffle.partitions with the factor (cpus·k),
     // the way a real cluster sizes partitions to the corpus. The
     // default soak HOLDS partitions fixed, so per-partition state
@@ -465,31 +466,18 @@ object Soak {
     // was an argument, not a measurement — this knob makes it one).
     val shufScale = sys.env.getOrElse("SPARK_GRAFT_SOAK_SHUFFLE_SCALE", "0") == "1"
     // SPARK_GRAFT_SOAK_SHUFFLE_PARTS=n: explicit HIGH initial shuffle
-    // partition count, left for AQE to coalesce down — the
-    // GraftSession.clusterBuilder profile (r12 VERDICT #1: the ×128
-    // jumps were attributed to fixed-32 per-partition state passing
-    // the spill envelope, but neither fixed-32 nor partitions-∝-factor
-    // is the configuration a real cluster runs; this knob is).
-    // Overrides both the fixed and the ∝-factor arms.
+    // partition count, left for AQE to coalesce down — the profile a
+    // real multi-executor cluster runs (r12 VERDICT #1: the ×128 jumps
+    // were attributed to fixed-32 per-partition state passing the spill
+    // envelope, but neither fixed-32 nor partitions-∝-factor is that
+    // profile; this knob is). Overrides both the fixed and ∝-factor arms.
     val shufParts = sys.env.get("SPARK_GRAFT_SOAK_SHUFFLE_PARTS").map(_.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // explicit, not default-trusted: the cluster-profile arm's whole
-      // point is high-initial + runtime coalesce
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same session surface as Verify/Bench: custom SQL functions + the
-    // levenshtein band/threshold optimizer rule
-    GraftExtensions.register(spark)
+    val spark = GraftSession.get(cpus)
 
     val workRoot = s"/tmp/graft_soak_${System.nanoTime()}"
     try {
       factors.foreach { k =>
-        val parts = shufParts.getOrElse(if (shufScale) cpus.toInt * k else cpus.toInt)
+        val parts = shufParts.getOrElse(if (shufScale) cpus * k else cpus)
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         val dir = s"$workRoot/x$k"
         // which families to scale comes from the explicit per-query map
@@ -539,16 +527,15 @@ object Soak {
           Tables.embeddings(spark, sfDir)
             .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
         val results = onlyQueries.map { name =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val n = GraftSession.forceAll(SparkEntry.queries(name)(spark, dir))
-          val dt = (System.nanoTime() - t0) / 1e9
-          SparkEntry.releaseCaches()
-          (name, dt, n)
+          val r = GraftSession.timedRun(spark)(SparkEntry.queries(name)(spark, dir))
+          r.left.foreach(e => System.err.println(s"[soak] $name failed: ${e.getMessage}"))
+          name -> r
         }
-        val qs = results.map { case (n, t, _) => s"\"$n\":$t" }.mkString("{", ",", "}")
-        val rows = results.map { case (n, _, r) => s"\"$n\":$r" }.mkString("{", ",", "}")
-        println(s"""{"factor":$k,"sharedDen":$sharedDen,"historyOnly":$historyOnly,"shuffleParts":$parts,"queries":$qs,"rows":$rows}""")
+        // a query that threw reads "FAILED" in both maps, never a time
+        def field(pick: ((Double, Long)) => Any): String = results.map { case (n, r) =>
+          s"\"$n\":" + r.fold(_ => "\"FAILED\"", pick(_).toString)
+        }.mkString("{", ",", "}")
+        println(s"""{"factor":$k,"sharedDen":$sharedDen,"historyOnly":$historyOnly,"shuffleParts":$parts,"queries":${field(_._1)},"rows":${field(_._2)}}""")
       }
     } finally {
       val p = new org.apache.hadoop.fs.Path(workRoot)

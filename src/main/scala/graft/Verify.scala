@@ -1,43 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in builder-authored SQL (or a quote in an
+    * env-controlled path) would otherwise make the reader's json.load fail
+    * and silently zero the round's correctness or bench artifact. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // SPARK_GRAFT_AQE=0 disables adaptive execution for the whole
     // battery — a determinism axis like SPARK_GRAFT_CPUS: every query
     // must stay hash-green whether or not the runtime re-plans
     // (coalesced partitions, demoted broadcasts, split skew joins).
-    // Default leaves Spark's default (AQE on) in force.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "1") != "0"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // custom SQL functions + the levenshtein band/threshold optimizer
-    // rule — the gate grades the REWRITTEN edit-distance plans
-    GraftExtensions.register(spark)
+    // Default leaves AQE on.
+    spark.conf.set("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "1") != "0")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=a,b,c restricts the dump (and the manifest) for
-    // fast local iteration on a few queries; the driver never sets it,
-    // so the real gate always covers everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // a typo'd ONLY would otherwise dump nothing and still gate green
-    // (every query labeled filtered_out) — fail loudly instead
-    only.foreach { o =>
-      require(selected.nonEmpty,
-        s"SPARK_GRAFT_ONLY matched no queries: ${o.mkString(",")}")
-    }
+    val only = GraftSession.onlySelected()
+    val selected = only.getOrElse(SparkEntry.queries)
     // delete a stale marker from a previous filtered run into this
     // outDir BEFORE dumping — if this run crashes mid-dump, the checker
     // must see missing_result rows, not inherit filtered leniency
@@ -53,20 +44,8 @@ object Verify {
       }
       finally SparkEntry.releaseCaches()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // manifest of every DECLARED query (never the filtered subset), so
     // the checker can flag results that failed to materialize instead of
@@ -75,7 +54,7 @@ object Verify {
     // as missing_result rows rather than a silently-shrunk battery; the
     // explicit "filtered" marker file makes the narrowing visible too.
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      SparkEntry.queries.keys.toSeq.sorted.map(jsonString).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -169,27 +169,4 @@ object Warehouse {
       .drop("__z")
       .write.mode("overwrite").parquet(path)
   }
-
-  /** Salted aggregation: spread a skewed groupBy key over `salts`
-    * sub-keys, partial-aggregate, then merge — two small shuffles
-    * instead of one shuffle with a straggler partition. `agg` must be
-    * decomposable (sum/count/min/max). */
-  def saltedCount(df: DataFrame, key: String, salts: Int = 16): DataFrame =
-    df.withColumn("__salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum("__partial").as("cnt"))
-
-  /** Salted join: replicate the small side `salts` times, salt the big
-    * side's key uniformly — every (key, salt) bucket is 1/salts of the
-    * hot key. For when AQE skew-split can't apply. */
-  def saltedJoin(
-      big: DataFrame, small: DataFrame, key: String, salts: Int = 16): DataFrame = {
-    val saltedBig = big.withColumn("__salt",
-      pmod(xxhash64(col(key), monotonically_increasing_id()), lit(salts)))
-    val replicatedSmall = small.withColumn("__salt",
-      explode(array((0 until salts).map(lit): _*)))
-    saltedBig.join(replicatedSmall, Seq(key, "__salt")).drop("__salt")
-  }
 }

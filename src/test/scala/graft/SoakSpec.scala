@@ -94,4 +94,26 @@ class SoakSpec extends AnyFunSuite {
     Soak.SoakReads.keys.foreach(q =>
       assert(SparkEntry.queries.contains(q), s"SoakReads key $q is not a battery query"))
   }
+
+  test("timedRun: a query that throws is a failure, not a time, and its pins are still released") {
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    // pinned inside the timed region, the way queries pin (timedRun's
+    // clearCache before the clock would otherwise drop it first)
+    var pinned: org.apache.spark.sql.DataFrame = null
+    var pinnedWhileRunning = false
+    val failed = GraftSession.timedRun(spark) {
+      pinned = CacheRegistry.persistTracked((1 to 10).toDF("x"))
+      pinnedWhileRunning = pinned.storageLevel != StorageLevel.NONE
+      pinned.select(raise_error(concat(lit("boom "), col("x").cast("string"))))
+    }
+    assert(failed.isLeft, s"a throwing query must not yield a time: $failed")
+    assert(failed.left.exists(_.getMessage.contains("boom")), s"$failed")
+    assert(pinnedWhileRunning)
+    assert(pinned.storageLevel == StorageLevel.NONE, "releaseCaches must run when the query throws")
+    // a good query returns its full row count
+    val ok = GraftSession.timedRun(spark)((1 to 10).toDF("x").where(col("x") > 3))
+    assert(ok.map(_._2) == Right(7L))
+    assert(ok.exists(_._1 >= 0.0))
+  }
 }

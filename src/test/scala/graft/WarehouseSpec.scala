@@ -95,12 +95,6 @@ class WarehouseSpec extends AnyFunSuite {
     assert(z <= 6, s"z-order should confine the box to a corner of the curve, got $z files")
   }
 
-  test("salted count equals plain count") {
-    val df = (Seq.fill(500)("hot") ++ Seq("a", "b", "c")).toDF("k")
-    val salted = Warehouse.saltedCount(df, "k").as[(String, Long)].collect().toMap
-    assert(salted == Map("hot" -> 500L, "a" -> 1L, "b" -> 1L, "c" -> 1L))
-  }
-
   test("schema evolution: a later writer's column surfaces, old files read as NULL") {
     val dir = java.nio.file.Files.createTempDirectory("graft_evolve_").toString + "/t"
     (1L to 100L).map(i => (i, s"v$i")).toDF("k", "a")
@@ -113,15 +107,5 @@ class WarehouseSpec extends AnyFunSuite {
     // old files surface the new column as NULL; new files carry it
     assert(evolved.where(col("c").isNull).count() == 100)
     assert(evolved.where(col("c") === 1010L).select("k").as[Long].collect().toSeq == Seq(101L))
-  }
-
-  test("salted join equals plain join") {
-    val big = (Seq.fill(200)(("hot", 1)) ++ Seq(("cold", 2))).toDF("k", "v")
-    val small = Seq(("hot", "H"), ("cold", "C")).toDF("k", "name")
-    val plain = big.join(small, "k").groupBy("k", "name").count()
-      .as[(String, String, Long)].collect().toSet
-    val salted = Warehouse.saltedJoin(big, small, "k").groupBy("k", "name").count()
-      .as[(String, String, Long)].collect().toSet
-    assert(salted == plain)
   }
 }

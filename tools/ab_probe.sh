@@ -42,8 +42,7 @@ for i in $(seq 1 "$N"); do
   for arm in A B; do
     envs="$([ "$arm" = A ] && echo "$ARM_A" || echo "$ARM_B")"
     # shellcheck disable=SC2086
-    # Probe lives in the root package, and sbt prefixes forked stdout
-    # with "[info] " — strip it with grep -o rather than anchoring
+    # Probe lives in the root package; grep -o keeps only PROBE lines
     env $envs sbt -batch "runMain Probe $QUERIES" 2>/dev/null |
       grep -o 'PROBE .*' | sed "s/^PROBE/PROBE $arm $i/" | tee -a "$LOG"
   done
@@ -51,7 +50,8 @@ done
 
 echo
 echo "summary (seconds; judge only non-overlapping ranges as real):"
-awk '/^PROBE/ {
+awk '/^PROBE/ && $5 == "FAILED" { failed[$2 " " $4]++; next }
+/^PROBE/ {
   key = $2 " " $4           # arm + query name
   t = $(NF - 0); sub(/s$/, "", t)
   times[key] = times[key] " " t
@@ -62,5 +62,6 @@ END {
     asort_min = a[1]; for (i = 2; i <= n; i++) if (a[i] < asort_min) asort_min = a[i]
     printf "  %-40s n=%d min=%.2f all=[%s]\n", k, n, asort_min, times[k]
   }
+  for (k in failed) printf "  %-40s FAILED in %d run(s)\n", k, failed[k]
 }' "$LOG" | sort -k1,1
 echo "raw log: $LOG"
