@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -36,11 +37,17 @@ object Verify {
     if (only.isDefined)
       Files.writeString(Paths.get(s"$outDir/FILTERED"),
         selected.keys.toSeq.sorted.mkString(","))
+    // A result dir is this run's complete dump or absent: a previous
+    // run's dump, or a partial one, must grade as missing_result when
+    // the query throws, never as a pass.
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      val out = new Path(s"$outDir/$name")
+      fs.delete(out, true)
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out.toString)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        fs.delete(out, true)
       }
       finally SparkEntry.releaseCaches()
     }

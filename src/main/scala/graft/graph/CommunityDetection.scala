@@ -101,9 +101,4 @@ object CommunityDetection {
 
     result.mapVertices((_, state) => state._1)
   }
-
-  /** G4: induced subgraph on a set of (dense) labels
-    * (ScipiBatchCommunity.java:256-262). */
-  def subgraphByLabels(labeled: Graph[Long, Double], keep: Set[Long]): Graph[Long, Double] =
-    labeled.subgraph(vpred = (_, label) => keep.contains(label))
 }

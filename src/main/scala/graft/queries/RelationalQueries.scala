@@ -83,24 +83,6 @@ object RelationalQueries extends QueryPack {
 
   /** (order_year, n_items) per order — the publication(year, #authors)
     * analogue; several queries below reuse this shape (A3-A6). */
-  /** Σcnt²/Σcnt strength over a (group, cnt: long) histogram — the
-    * A14 kernel, factored so the int64-envelope fixture can drive a
-    * planted wide histogram through the PRODUCTION expression. cnt² is
-    * widened to DECIMAL(38,0) INSIDE the sum (the q_correlation
-    * discipline): a raw int64 Σcnt² wraps once any group exceeds
-    * ≈ 3.04e9 members (cnt² > 2⁶³) — inside the 100 TB envelope —
-    * while DuckDB sums integers into HUGEINT and stays exact, so the
-    * raw-long version diverges silently at scale. Both decimal sums
-    * exit through the same correctly-rounded cast-to-double the
-    * oracle's `* 1.0` applies to its HUGEINT, then the identical fixed
-    * float tail (two divisions, round 6). */
-  private[graft] def brandStrength(hist: DataFrame): DataFrame = {
-    def d38(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    hist.agg(
-      round(sum(d38(col("cnt")) * d38(col("cnt"))).cast("double") /
-        sum(col("cnt")).cast("double") / 100.0, 6).as("strength"))
-  }
-
   private def orderSizes(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .groupBy("l_orderkey").agg(count(lit(1)).as("n_items"))
@@ -270,8 +252,9 @@ object RelationalQueries extends QueryPack {
 
     // A14: community-strength analogue over the brand histogram.
     "q_brand_strength" -> ((s, d) =>
-      brandStrength(
-        Tables.part(s, d).groupBy("p_brand").agg(count(lit(1)).as("cnt")))),
+      graft.analytics.PubAggregates.communityStrength(
+        Tables.part(s, d).groupBy("p_brand").agg(count(lit(1)).as("cnt")))
+        .select(round(col("strength"), 6).as("strength"))),
 
     // J1 + A10: union of two overlapping slices, dedup, rollup.
     "q_union_dedup" -> ((s, d) => {

@@ -86,21 +86,6 @@ object StreamJobs {
         batch.write.mode("overwrite").parquet(path)
       }
 
-  /** S4, the 100 TB variant: update-mode — each micro-batch carries
-    * ONLY the keys whose aggregate changed, merged into the target by
-    * key. Complete-mode rewrites the whole table per batch, which stops
-    * scaling once the keyed state is large (e.g. 1e6+ keywords); this
-    * is the reference's true per-record upsert dataflow. */
-  def aggregateSinkUpdate(
-      agg: DataFrame, path: String, checkpoint: String,
-      keys: Seq[String]): DataStreamWriter[Row] =
-    agg.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.io.Warehouse.upsertParquet(batch.sparkSession, path, batch, keys)
-      }
-
   /** Whole topology: two raw streams in, raw sink + six aggregate sinks
     * out (one StreamingQuery each, like the reference's one-sink-per-
     * pipeline dataflow). Caller awaits/stops. */

@@ -53,13 +53,17 @@ class BatchJobsSpec extends AnyFunSuite {
   ).toDF("title", "authors", "keywords", "fos", "venue", "publisher", "year")
 
   test("community job: dense community found, decorated edges typed") {
-    val r = BatchJobs.community(pubs, keywords = Seq("ml"), nDense = 3, topCommunities = 2)
+    // two components (the ml clique, the db pair), so top-1 leaves one out
+    val r = BatchJobs.community(pubs, keywords = Seq("ml", "db"), nDense = 3, topCommunities = 1)
     val hist = r.labelHistogram.as[(Long, Long)].collect()
     assert(hist.nonEmpty, "at least one dense community")
     val edges = r.decoratedEdges.collect()
     assert(edges.nonEmpty)
     // every decorated edge carries both endpoint types and labels
     assert(edges.forall(e => !e.isNullAt(1) && !e.isNullAt(2) && !e.isNullAt(4) && !e.isNullAt(5)))
+    // G4: only the top-1 community's induced subgraph is decorated
+    val top = hist.minBy { case (label, cnt) => (-cnt, label) }._1
+    assert(edges.forall(e => e.getAs[Long]("srcLabel") == top && e.getAs[Long]("dstLabel") == top))
   }
 
   test("association job: both branches produce expected keys") {

@@ -51,14 +51,6 @@ class GraphSpec extends AnyFunSuite {
     assert(labels(1L) != labels(4L), "triangles should differ")
   }
 
-  test("G4 subgraph by labels") {
-    val sc = spark.sparkContext
-    val g = Graph.fromEdges(sc.parallelize(Seq(Edge(1L, 2L, 1.0), Edge(3L, 4L, 1.0))), 0L)
-      .mapVertices((id, _) => if (id <= 2) 10L else 20L)
-    val sub = CommunityDetection.subgraphByLabels(g, Set(10L))
-    assert(sub.vertices.count() == 2 && sub.edges.count() == 1)
-  }
-
   /** Plain-Scala replay of ExactPageRank's integer iteration — an
     * implementation-independent reference for the Spark version. */
   private def referenceRanks(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {

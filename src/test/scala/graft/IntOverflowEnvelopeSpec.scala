@@ -1,6 +1,5 @@
 package graft
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -20,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Every expected value is recomputed here in BigInt/BigDecimal,
   * replicating the production formula step for step (truncating `div`,
-  * correctly-rounded decimal→double casts, HALF_UP round) — the spec
+  * correctly-rounded decimal→double casts) — the spec
   * never trusts the engine for the arithmetic it is auditing.
   */
 class IntOverflowEnvelopeSpec extends AnyFunSuite {
@@ -29,10 +28,6 @@ class IntOverflowEnvelopeSpec extends AnyFunSuite {
 
   private def fixtureDir(): String =
     java.nio.file.Files.createTempDirectory("graft_i64_").toString
-
-  /** Spark round(x, 6) on DOUBLE: BigDecimal HALF_UP at scale 6. */
-  private def round6(x: Double): Double =
-    new JBigDecimal(x).setScale(6, RoundingMode.HALF_UP).doubleValue()
 
   test("q_regr_slope: per-row x*y past 2^63 stays exact (d38 inside the sum)") {
     val dir = fixtureDir()
@@ -105,20 +100,8 @@ class IntOverflowEnvelopeSpec extends AnyFunSuite {
     assert(census(norm) == 1L, "the planted 100.0 reading is the one outlier")
   }
 
-  test("brandStrength kernel: cnt² past 2^63 stays exact (planted histogram)") {
-    // cnt = 4e9 → cnt² = 1.6e19 > 2^63. The kernel is the PRODUCTION
-    // expression behind q_brand_strength, factored so a histogram this
-    // wide is plantable (counting 4e9 real part rows is not).
-    val hist = Seq(("A", 4000000000L), ("B", 1L)).toDF("p_brand", "cnt")
-    val sumSq = BigInt(4000000000L) * BigInt(4000000000L) + 1
-    val sumCnt = BigInt(4000000001L)
-    val want = round6(sumSq.doubleValue / sumCnt.doubleValue / 100.0)
-    val got = graft.queries.RelationalQueries.brandStrength(hist)
-      .as[Double].collect().head
-    assert(got == want, s"strength diverged: got $got, want $want")
-  }
-
   test("communityStrength (A14 library kernel): same envelope, same discipline") {
+    // cnt = 4e9 → cnt² = 1.6e19 > 2^63; this kernel is what q_brand_strength runs.
     val hist = Seq(("c1", 4000000000L), ("c2", 1L)).toDF("label", "cnt")
     val sumSq = BigInt(4000000000L) * BigInt(4000000000L) + 1
     val want = sumSq.doubleValue / 4000000001.0 / 100.0

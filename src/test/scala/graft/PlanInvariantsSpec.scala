@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Plan-shape invariants for the headline / most expensive queries, so
   * the pushdown / broadcast / no-cartesian claims in PLANS.md cannot
@@ -23,6 +24,14 @@ class PlanInvariantsSpec extends AnyFunSuite {
     SparkEntry.releaseCaches()
     s
   }
+
+  /** Every node of `plan`, of its subqueries and of the plans under its
+    * cached relations: the operators a formatted explain prints. */
+  private def allNodes(plan: SparkPlan): Seq[SparkPlan] =
+    plan.collectWithSubqueries { case n => n }.flatMap {
+      case m: InMemoryTableScanExec => m +: allNodes(m.relation.cachedPlan)
+      case n => Seq(n)
+    }
 
   test("q1_pricing_summary: shipdate filter pushed to the parquet scan") {
     val p = planOf("q1_pricing_summary")
@@ -243,9 +252,14 @@ class PlanInvariantsSpec extends AnyFunSuite {
     // groupBy+join re-derived the whole tf pipeline (tokenizer and
     // (doc, term) aggregate ran twice). No join of any kind remains,
     // and the single tokenize pass shows as exactly one documents scan.
-    assert(!p.contains("Join"), s"df must ride a window, never a join:\n$p")
-    assert("\\(\\d+\\) Scan parquet".r.findAllIn(p).size == 1,
-      s"one tokenize pass — exactly one documents scan:\n$p")
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val plan = SparkEntry.queries("text_tfidf_terms")(spark, sf).queryExecution.sparkPlan
+    SparkEntry.releaseCaches()
+    val nodes = allNodes(plan)
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), s"df must ride a window, never a join:\n$plan")
+    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 1,
+      s"one tokenize pass — exactly one documents scan:\n$plan")
   }
 
   test("dedup_semantic: bucket-local assignment — keyed joins only, no N-sized broadcast") {

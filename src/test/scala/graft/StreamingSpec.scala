@@ -62,26 +62,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("update-mode sink merges only changed keys") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_upd").toString
-    val mem = MemoryStream[String]
-    val agg = StreamJobs.aggregates(StreamJobs.ingest(mem.toDF(), "oag"))("keywords")
-    val q = StreamJobs.aggregateSinkUpdate(
-      agg, s"$dir/kw", s"$dir/ckpt", Seq("keyword_name")).start()
-    try {
-      mem.addData(rows.take(2): _*)     // ml:2? -> ml appears in 2 of first two rows
-      q.processAllAvailable()
-      val first = spark.read.parquet(s"$dir/kw").as[(String, Long)].collect().toMap
-      mem.addData(rows.drop(2): _*)      // only 'db' changes in batch 2
-      q.processAllAvailable()
-      val second = spark.read.parquet(s"$dir/kw").as[(String, Long)].collect().toMap
-      assert(second == Map("ml" -> 2L, "db" -> 2L))
-      assert(first("ml") == 2L && first("db") == 1L)
-    } finally q.stop()
-  }
-
   test("text quality filtering runs unchanged on a stream") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
