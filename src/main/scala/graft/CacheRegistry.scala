@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Tracks intermediates a query `persist()`ed so the session can release
   * them deterministically once the query's action completes.
@@ -17,6 +19,7 @@ import org.apache.spark.sql.Dataset
   */
 object CacheRegistry {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
+  private val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
   private val broadcasts =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.broadcast.Broadcast[_]]()
 
@@ -25,6 +28,22 @@ object CacheRegistry {
     ds.persist()
     tracked.add(ds)
     ds
+  }
+
+  /** `localCheckpoint(eager = true)` + register the checkpointed RDD
+    * for later release. The cut relation's plan is a scan of blocks
+    * the block manager holds — not a cache-manager entry, so
+    * `unpersist` on the Dataset would not free them; `releaseAll`
+    * unpersists the RDD itself. Same contract as [[persistTracked]]:
+    * a released relation's blocks are gone, so release only between
+    * queries. */
+  def checkpointTracked[T](ds: Dataset[T]): Dataset[T] = {
+    val cut = ds.localCheckpoint(eager = true)
+    cut.queryExecution.logical.foreach {
+      case r: LogicalRDD => checkpoints.add(r.rdd)
+      case _ =>
+    }
+    cut
   }
 
   /** Register a per-query broadcast (bloom filters, lookup sets) so it is
@@ -43,17 +62,19 @@ object CacheRegistry {
     bc
   }
 
-  /** Unpersist everything registered since the last release. */
+  /** Unpersist everything registered since the last release: persist
+    * pins, checkpoint blocks and broadcasts. */
   def releaseAll(): Unit = {
-    var d = tracked.poll()
-    while (d != null) {
-      d.unpersist(blocking = false)
-      d = tracked.poll()
-    }
-    var b = broadcasts.poll()
-    while (b != null) {
-      b.destroy()
-      b = broadcasts.poll()
+    drain(tracked)(_.unpersist(blocking = false))
+    drain(checkpoints)(_.unpersist(blocking = false))
+    drain(broadcasts)(_.destroy())
+  }
+
+  private def drain[A](q: java.util.concurrent.ConcurrentLinkedQueue[A])(release: A => Unit): Unit = {
+    var x = q.poll()
+    while (x != null) {
+      release(x)
+      x = q.poll()
     }
   }
 }

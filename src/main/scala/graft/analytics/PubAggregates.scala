@@ -39,7 +39,11 @@ object PubAggregates {
         when(size(col("authors")) > 1, 1L).otherwise(0L).as("j"))
       .groupBy("year")
       .agg(sum("s").as("single"), sum("j").as("joint"))
-      .withColumn("total", col("single") + col("joint"))
+      .transform(withYearShares)
+
+  /** A3's derived columns over (single, joint) counts. */
+  def withYearShares(counts: DataFrame): DataFrame =
+    counts.withColumn("total", col("single") + col("joint"))
       .withColumn("single_perc", col("single") / col("total"))
       .withColumn("joint_perc", col("joint") / col("total"))
 
@@ -50,7 +54,11 @@ object PubAggregates {
     pubs.select(size(col("authors")).as("author_unit"))
       .groupBy("author_unit")
       .agg(count(lit(1)).as("no_articles"))
-      .withColumn("no_authors", col("author_unit").cast("long") * col("no_articles"))
+      .transform(withUnitAuthors)
+
+  /** A4's derived column over (author_unit, no_articles). */
+  def withUnitAuthors(counts: DataFrame): DataFrame =
+    counts.withColumn("no_authors", col("author_unit").cast("long") * col("no_articles"))
 
   /** A5/P10: average authors per paper per year
     * (ScipiStream.java:188-197,895-942). */
@@ -58,12 +66,19 @@ object PubAggregates {
     pubs.select(col("year"), size(col("authors")).cast("long").as("n_authors"))
       .groupBy("year")
       .agg(count(lit(1)).as("no_articles"), sum("n_authors").as("no_authors"))
-      .withColumn("avg_author_paper", col("no_authors") / col("no_articles"))
+      .transform(withAvgAuthors)
+
+  /** A5's derived column over (no_articles, no_authors). */
+  def withAvgAuthors(counts: DataFrame): DataFrame =
+    counts.withColumn("avg_author_paper", col("no_authors") / col("no_articles"))
+
+  /** A6's author-count threshold (ScipiStream.java:952). */
+  val HyperAuthors = 100
 
   /** A6/P11: hyper-authorship count — >= `threshold` authors
     * (ScipiStream.java:199-207,944-962; threshold 100 per the code at
     * :952 — the comment says 500, the code wins). */
-  def hyperAuthorship(pubs: DataFrame, threshold: Int = 100): DataFrame =
+  def hyperAuthorship(pubs: DataFrame, threshold: Int = HyperAuthors): DataFrame =
     pubs.where(size(col("authors")) >= threshold)
       .groupBy(col("year").as("hyper_authorship_year"))
       .agg(count(lit(1)).as("hyper_authorship_count"))

@@ -12,17 +12,19 @@ import org.apache.spark.sql.functions._
   * Both operators follow the ExactPageRank loop discipline: the
   * undirected edge table is repartitioned by src and persisted ONCE,
   * each round pays one join against that stationary table, and every
-  * round-carried relation is persisted. With TWO references to the
-  * previous round (k-core's degree join) the nested plan is 2^R
-  * subtrees — cache-manager substitution handles that at plan time, so
-  * lazy persist suffices (measured: dropping the per-round count()
-  * actions cut graph_part_kcore from ~5.5 s to ~3.7 s at sf0.1). The
-  * 4-reference variant (explicit removed-set anti-joins) nests 4^R and
-  * hangs the driver in canonicalization — that shape needs eager
-  * materialization, or better, this restructuring. All arithmetic is
-  * integer, so results are bit-identical under
-  * any partitioning — the property that lets the driver queries take
-  * hard DuckDB value oracles (the same rounds unrolled as CTEs).
+  * round-carried relation is pinned. A round that references the
+  * previous round twice nests 2^R subtrees. Lazy persist handles that
+  * at execution (cache-manager substitution runs each round once), but
+  * every plan string still carries the whole tree, and AQE formats it
+  * on each re-plan: k-core's formatted plan was 2.15 MB, and under AQE
+  * at sf0.01 a 6 GB driver ran out of heap. So k-core cuts the lineage
+  * each round with an eager local checkpoint
+  * ([[graft.CacheRegistry.checkpointTracked]]), and each round plans
+  * against a scan of the previous round's blocks (about 2× faster at
+  * sf0.1, same 5,922 rows); sssp's smaller tree stays lazily persisted. All arithmetic is integer, so results are
+  * bit-identical under any partitioning — the property that lets the
+  * driver queries take hard DuckDB value oracles (the same rounds
+  * unrolled as CTEs).
   */
 object GraphOps {
 
@@ -73,7 +75,7 @@ object GraphOps {
     val und = stationaryUndirected(edges, Seq("src", "dst"))
     // degree state over survivors: starts as the full-graph degree
     // (every vertex appears as a src in the undirected table)
-    var state = graft.CacheRegistry.persistTracked(
+    var state = graft.CacheRegistry.checkpointTracked(
       und.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg")))
     val removedParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to rounds) {
@@ -86,7 +88,7 @@ object GraphOps {
       // every incident edge exactly once per direction
       val dec = und.join(removed.select(col("v").as("src")), Seq("src"))
         .groupBy(col("dst").as("v")).agg(count(lit(1)).as("dd"))
-      state = graft.CacheRegistry.persistTracked(
+      state = graft.CacheRegistry.checkpointTracked(
         state.where(col("deg") >= k)
           .join(dec, Seq("v"), "left")
           .select(col("v"),

@@ -1,6 +1,8 @@
 package graft
 
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import org.apache.spark.graphx.{Edge, Graph}
 import graft.graph.{CommunityDetection, PubGraph}
 
@@ -199,6 +201,26 @@ class GraphSpec extends AnyFunSuite {
     SparkEntry.releaseCaches()
     assert(got == Map(1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 0L,
       5L -> 2L, 6L -> 1L, 7L -> 1L))
+  }
+
+  test("checkpointTracked: releaseCaches frees k-core's per-round checkpoint blocks") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
+    graft.graph.GraphOps.kcoreRounds(edges, k = 2, rounds = 3).collect()
+    val cut = CacheRegistry.checkpointTracked(spark.range(100).toDF("v"))
+    assert(cut.count() == 100)
+    assert((persisted -- before).nonEmpty)
+    SparkEntry.releaseCaches()
+    assert((persisted -- before).isEmpty,
+      "every persist pin and checkpointed RDD is unregistered")
+    // the blocks themselves go asynchronously; once gone, the cut
+    // relation can no longer be read
+    eventually(timeout(Span(30, Seconds))) {
+      val e = intercept[org.apache.spark.SparkException](cut.count())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("Checkpoint block")), e)
+    }
   }
 
   test("GraphOps.ssspRounds: later rounds refine shortcut distances; disconnected is -1") {

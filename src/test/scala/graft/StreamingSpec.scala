@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamJobs
@@ -11,11 +13,12 @@ import graft.streaming.StreamJobs
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def oagJson(title: String, year: String, authors: Seq[String], kws: Seq[String]) = {
+  private def oagJson(title: String, year: String, authors: Seq[String], kws: Seq[String],
+      fos: String = """["cs"]""") = {
     val as = authors.map(a => s"""{"name":"$a"}""").mkString(",")
     val ks = kws.map(k => s""""$k"""").mkString(",")
     s"""{"title":"$title","doi":"10.1/$title","lang":"en","publisher":"pub",
-       |"venue":null,"year":"$year","keywords":[$ks],"authors":[$as],"fos":["cs"]}"""
+       |"venue":null,"year":"$year","keywords":[$ks],"authors":[$as],"fos":$fos}"""
       .stripMargin.replace("\n", "")
   }
 
@@ -85,13 +88,27 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    // beyond `rows`: a 120-author paper (A6's hyper branch) and one with
+    // null fos (only keywords non-empty — its base rows must survive)
+    val oagRows = rows ++ Seq(
+      oagJson("p hyper", "2020", (1 to 120).map(i => s"author $i"), Seq("physics")),
+      oagJson("p nofos", "2021", Seq("eve"), Seq("ml"), fos = "null"))
+    val dblpRows = Seq(
+      """{"key":"c/1","title":"Dblp Paper","year":"2019","conference":"icml","authors":["dan"]}""")
     val oag = MemoryStream[String]
     val dblp = MemoryStream[String]
-    oag.addData(rows: _*)
-    dblp.addData("""{"key":"c/1","title":"Dblp Paper","year":"2019","conference":"icml","authors":["dan"]}""")
+    oag.addData(oagRows: _*)
+    dblp.addData(dblpRows: _*)
     val queries = StreamJobs.runAll(oag.toDF(), dblp.toDF(), s"$dir/out", s"$dir/ckpt")
-    try queries.foreach(_.processAllAvailable()) finally queries.foreach(_.stop())
-    assert(spark.read.parquet(s"$dir/out/publications").count() == 4)
+    try {
+      queries.foreach(_.processAllAvailable())
+      assert(queries.length == 2, "raw sink + ONE aggregate query")
+      val plan = queries(1).asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      assert(plan.collect { case s: StateStoreSaveExec => s }.length == 1,
+        s"the six aggregates share one state store:\n$plan")
+    } finally queries.foreach(_.stop())
+    assert(spark.read.parquet(s"$dir/out/publications").count() == 6)
 
     // Restart the whole topology from its checkpoints with one record
     // RE-delivered: the raw sink must upsert by (doi, title) — same row
@@ -100,11 +117,25 @@ class StreamingSpec extends AnyFunSuite {
     oag.addData(rows.head)
     val restarted = StreamJobs.runAll(oag.toDF(), dblp.toDF(), s"$dir/out", s"$dir/ckpt")
     try restarted.foreach(_.processAllAvailable()) finally restarted.foreach(_.stop())
-    assert(spark.read.parquet(s"$dir/out/publications").count() == 4)
+    assert(spark.read.parquet(s"$dir/out/publications").count() == 6)
     val kw = spark.read.parquet(s"$dir/out/keywords")
       .as[(String, Long)].collect().toMap
-    assert(kw == Map("ml" -> 3L, "db" -> 2L, "computer science" -> 1L))
-    assert(spark.read.parquet(s"$dir/out/aap").count() == 2)
+    assert(kw == Map("ml" -> 4L, "db" -> 2L, "physics" -> 1L, "computer science" -> 1L))
+    val hyper = spark.read.parquet(s"$dir/out/hyper_authorship")
+      .as[(String, Long)].collect().toSeq
+    assert(hyper == Seq("2020" -> 1L))
+
+    // every sink equals the batch aggregate over every delivered row:
+    // same columns, order, types and rows
+    val batch = StreamJobs.aggregates(StreamJobs.unionIngest(
+      (oagRows :+ rows.head).toDF("value"), dblpRows.toDF("value")))
+    def columns(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    def sortedRows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((name, want) <- batch) {
+      val got = spark.read.parquet(s"$dir/out/$name")
+      assert(columns(got) == columns(want), s"$name columns")
+      assert(sortedRows(got) == sortedRows(want), s"$name rows")
+    }
   }
 
   test("S1 kafka source executes end-to-end (reference ScipiStream.java:89-124)") {
